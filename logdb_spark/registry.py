@@ -67,6 +67,8 @@ _LOADED = False
 # (26 ops) followed by the oldest of the r7 bucket. The 50-cap
 # samples all 26 r5 ops plus the first 24 r7 ops — after this round
 # no operator's driver evidence is older than r7.
+# The tuple holds 60 names (26 r5 + 34 r7): the last 10 r7 names are
+# over-emitted on purpose and head the next round's rotation.
 _R14_NEEDS_ROW_FIRST = (
     "log_change_point",  # r5
     "log_cohort_ltv",  # r5
@@ -129,7 +131,6 @@ _R14_NEEDS_ROW_FIRST = (
     "sql_pivot_clause",  # r7
     "sql_q11_important_stock",  # r7
 )
-
 
 
 def _enumeration_order(ops: dict[str, Operator]) -> list[str]:

@@ -300,6 +300,19 @@ def _ddl_to_arrow(ddl: str):
     raise ValueError(f"unsupported schema_map column type: {ddl!r}")
 
 
+def _feed_type(t):
+    """The feed's Arrow type for a stored column type. Spark's Arrow
+    bridge takes microsecond timestamps only, and a Spark-written INT96
+    column (events ``ts``) reads back from the footer as
+    ``timestamp[ns]`` — any non-us timestamp is normalised to us, with
+    its zone kept; every other type passes through."""
+    import pyarrow as pa
+
+    if pa.types.is_timestamp(t) and t.unit != "us":
+        return pa.timestamp("us", t.tz)
+    return t
+
+
 def _feed_fields(root: str, columns: str | None = None) -> list[tuple]:
     """(file_name, out_name, arrow_type) fields of the feed's DATA
     columns. ``file_name`` is the column name as stored in parquet
@@ -333,10 +346,10 @@ def _feed_fields(root: str, columns: str | None = None) -> list[tuple]:
             f"empty txlog table at {root!r} — no committed data file to "
             "derive a feed schema from"
         )
-    by_phys = {f.name: f.type for f in footer}
+    by_phys = {f.name: _feed_type(f.type) for f in footer}
     smap = _newest_meta(root, "schema_map")
     if smap is None:
-        fields = [(f.name, f.name, f.type) for f in footer]
+        fields = [(f.name, f.name, by_phys[f.name]) for f in footer]
     else:
         fields = [
             (
@@ -476,8 +489,11 @@ def _read_slice(part: _FileSlice, fields: list[tuple], cdf: bool = False):
     pre-evolution file lacks null-fills at its feed type. A
     key-retraction slice (``part.key``) reads ONLY the key column and
     null-fills every other field — the deleted keys are materialized,
-    the dead rows are not."""
+    the dead rows are not. Timestamps land as microseconds
+    (``_feed_type``); sub-microsecond digits, which Spark cannot
+    hold, are truncated."""
     import pyarrow as pa
+    import pyarrow.compute as pc
     import pyarrow.dataset as pads
 
     d = pads.dataset(part.path, format="parquet")
@@ -492,13 +508,16 @@ def _read_slice(part: _FileSlice, fields: list[tuple], cdf: bool = False):
     if cdf:
         cols["change_type"] = pa.repeat(pa.scalar(part.change), n)
     for fname, out, typ in fields:
+        typ = _feed_type(typ)
         cols[out] = (
-            t.column(fname).cast(typ)
+            pc.cast(
+                t.column(fname),
+                options=pc.CastOptions(typ, allow_time_truncate=True),
+            )
             if fname in want
             else pa.nulls(n, typ)
         )
     yield from pa.table(cols).combine_chunks().to_batches()
-
 
 
 def _fields_from_struct(schema, cdf: bool) -> list[tuple]:

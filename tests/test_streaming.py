@@ -1839,3 +1839,28 @@ def test_txlog_stream_meta_resolution_checkpoint_bounded(spark, tmp_path):
     with open(tx._cppath(cp_v), "w") as f:
         _json.dump(doc, f)
     assert _newest_meta(tx.root, "schema_map") == smap2
+
+
+def test_txlog_feed_of_spark_written_timestamps(spark, tmp_path):
+    """The full-row feed of a ``write_grouped`` events table: Spark
+    writes ``ts`` as INT96, which pyarrow reads back as
+    ``timestamp[ns]`` — a type Spark's Arrow bridge refuses
+    (UNSUPPORTED_ARROWTYPE). The feed normalises it to microseconds,
+    so every row, ``ts`` included, reads back exactly as written."""
+    from logdb_spark.sources.txlogstream import register_txlogstream
+    from logdb_spark.tablefmt import TxTable, write_grouped
+
+    ev = load_table(spark, SF_SMALL, "events").withColumn(
+        "g", F.dayofmonth("ts")
+    )
+    tx = TxTable(spark, str(tmp_path / "tbl"))
+    tx.commit(write_grouped(ev, tx.root, "c1", "event_id"))
+
+    register_txlogstream(spark)
+    feed = spark.read.format("txlogstream").option("path", tx.root).load()
+    data_cols = [c for c in ev.columns if c != "g"]
+    assert feed.columns == ["version", *data_cols]
+    assert dict(feed.dtypes)["ts"] == "timestamp"
+    got = _rows(feed, data_cols)
+    assert got and got == _rows(ev, data_cols)
+    assert {r[0] for r in feed.select("version").distinct().collect()} == {1}

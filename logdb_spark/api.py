@@ -102,15 +102,21 @@ class LogDB:
             first = msg.strip().splitlines()[0] if msg.strip() else "syntax error"
             raise LogDBError(f"invalid regex {pattern!r}: {first}") from None
 
-    def _check_timestamp(self, value: str, param: str) -> None:
+    def _check_timestamps(self, **bounds: str) -> None:
+        """Raise for the first of ``bounds`` (param -> value) that does
+        not cast to a timestamp. The casts select from an inline VALUES
+        row, which the optimizer folds into a LocalRelation, so the
+        check starts no Spark job."""
+        casts = ", ".join(f"try_cast(? AS TIMESTAMP) AS {p}" for p in bounds)
         row = self.spark.sql(
-            "SELECT try_cast(? AS TIMESTAMP) AS t", args=[value]
+            f"SELECT {casts} FROM VALUES (1)", args=list(bounds.values())
         ).first()
-        if row.t is None:
-            raise LogDBError(
-                f"{param}={value!r} is not a parseable timestamp "
-                "(expected e.g. '2024-01-02' or '2024-01-02 03:04:05')"
-            )
+        for param, value in bounds.items():
+            if row[param] is None:
+                raise LogDBError(
+                    f"{param}={value!r} is not a parseable timestamp "
+                    "(expected e.g. '2024-01-02' or '2024-01-02 03:04:05')"
+                )
 
     def _check_columns(self, df: DataFrame, name: str, *cols: str) -> None:
         missing = [c for c in cols if c not in df.columns]
@@ -153,13 +159,13 @@ class LogDB:
         self._check_regex(pattern)
         if columns:
             self._check_columns(df, name, *columns)
-        if since or until:
+        bounds = {p: v for p, v in (("since", since), ("until", until)) if v}
+        if bounds:
             self._check_columns(df, name, ts_col)
+            self._check_timestamps(**bounds)
         if since:
-            self._check_timestamp(since, "since")
             df = df.filter(F.col(ts_col) >= F.lit(since).cast("timestamp"))
         if until:
-            self._check_timestamp(until, "until")
             df = df.filter(F.col(ts_col) < F.lit(until).cast("timestamp"))
         str_cols = columns or [c for c, t in df.dtypes if t == "string"]
         if not str_cols:

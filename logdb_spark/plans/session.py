@@ -40,6 +40,27 @@ builds the session. Measured on a 4-core x86-64 host (CPython 3.11.7, Spark
 and a 4-partition ``mapInArrow`` 0.50 -> 0.29 s (medians), and the
 ``table_ingest`` benchmark's change-feed read 1.01 -> 0.33 s (medians
 of 10 runs); the probe itself adds about 0.35 s to ``get_spark``.
+
+Generated-code cache (``spark.sql.codegen.cache.maxEntries`` in
+``STATIC_CONFS``). Spark keeps every class it compiles for generated
+code (whole-stage code, projections, orderings) in one per-JVM cache
+keyed by the generated source, and evicts the least recently used
+class once the cache is full; Spark's default size is 100. One pass of
+the ``log_interactive`` benchmark (10 registry operators, 7 ``LogDB``
+calls) needs about 210 distinct classes, so with the default every
+class was evicted before its next use and every warm pass recompiled
+139-186 of them, at 13-15 ms each, both on the driver while planning
+and inside each stage's task (local mode shares the cache). Measured
+working sets: 46 classes for ``table_ingest``, about 210 for
+``log_interactive`` and 3651 for one sweep of the whole 373-operator
+registry at sf0.01, which grew metaspace from 79 to 252 MB, about
+48 KB per class; a second sweep compiled only 14, so the generated
+source is deterministic and caching it pays off. 1024 entries hold five
+times the interactive working set and bound the cache to about 50 MB
+of metaspace, where an unbounded cache would grow with every distinct
+query shape. Static conf: ``configure`` cannot set it, so sessions
+built elsewhere keep 100. ``tools/codegen_working_set.py`` measures a
+working set and whether the cache holds it.
 """
 
 from __future__ import annotations
@@ -89,7 +110,18 @@ STATIC_CONFS: dict[str, str] = {
     # this conf only changes the small-R regime, in the direction of
     # fewer, larger files (§2.2, §6).
     "spark.shuffle.sort.bypassMergeThreshold": "8",
+    # Generated-code cache (module docstring): Spark's default of 100
+    # classes is half the ~210 one log_interactive pass needs, so LRU
+    # eviction made every warm query recompile its classes.
+    "spark.sql.codegen.cache.maxEntries": "1024",
 }
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes the code generator has compiled in this JVM so far: one
+    per generated-code cache miss."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def configure(spark: SparkSession) -> SparkSession:

@@ -28,6 +28,28 @@ def test_search_with_time_range(db):
     assert all("2024-01-02" <= str(r["ts"])[:10] < "2024-01-05" for r in rows)
 
 
+def test_search_time_range_starts_no_job_before_action(db):
+    """Validating since/until is part of building the search, so it
+    must not cost a Spark job; a bad bound still fails eagerly."""
+    from logdb_spark.api import LogDBError
+
+    sc = db.spark.sparkContext
+    group = "test-search-time-range"
+    sc.setJobGroup(group, group)
+    try:
+        hits = db.search("ev", "^err", since="2024-01-02", until="2024-01-05")
+        for bound in ("2024", "2024-01-03", "2024-01-02 03:04:05"):
+            db.search("ev", "err", since=bound)
+        with pytest.raises(LogDBError, match="until='nope'"):
+            db.search("ev", "err", since="2024-01-02", until="nope")
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert hits.count() > 0
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
 def test_search_requires_string_columns(db):
     db.register("nums", db.table("ev").select("value", "ts"))
     with pytest.raises(ValueError):

@@ -1,8 +1,10 @@
-"""Python worker start-up (plans/session.py): sessions from ``get_spark``
+"""Session set-up (plans/session.py). Sessions from ``get_spark``
 launch their Python workers through ``plans/worker_python.sh``, which
 drops Spark's zipped pyspark, py4j and spark-core archives from the
 worker path, and only when a probe shows the worker interpreter's own
-pyspark matches the JVM's version."""
+pyspark matches the JVM's version. Their generated-code cache holds
+1024 classes, so a warm working set larger than Spark's default of 100
+is not recompiled."""
 
 from __future__ import annotations
 
@@ -13,6 +15,7 @@ import pyspark.sql.functions as F
 
 from logdb_spark.plans.session import (
     WORKER_LAUNCHER,
+    codegen_compiles,
     spark_python_path,
     worker_launcher,
 )
@@ -158,3 +161,23 @@ def test_probe_keeps_default_when_probe_fails(spark, tmp_path):
         assert worker_launcher(stub, spark.version, drop) == (stub, {})
     missing = str(tmp_path / "no_such_python")
     assert worker_launcher(missing, spark.version, drop) == (missing, {})
+
+
+def test_codegen_cache_keeps_a_warm_working_set(spark):
+    """60 distinct projections compile about 120 classes, more than
+    Spark's default cache of 100 holds: with that default the second
+    round recompiles most of them, with 1024 it compiles none."""
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.sql.codegen.cache.maxEntries") == "1024"
+    # The multiplier is inlined into the generated source, so every
+    # projection needs classes of its own.
+    exprs = [f"id * {i} + 7 AS x" for i in range(1000, 1060)]
+
+    def compiles_per_round() -> int:
+        before = codegen_compiles(spark)
+        for expr in exprs:
+            spark.range(10).selectExpr(expr).collect()
+        return codegen_compiles(spark) - before
+
+    assert compiles_per_round() >= len(exprs)
+    assert compiles_per_round() == 0
